@@ -14,11 +14,19 @@ pieces Spark does not give us for free:
 - an ``information_schema.tables`` view + SHOW TABLES parity
   (reference: qurious/src/execution/information_schema.rs:12-46).
 
-Scale notes (100 TB): the session never collects to the driver; managed-table
-mutations build union/filter plans lazily and checkpoint (the shim in
-qurious_spark/checkpoint.py: local by default, reliable when
-SPARK_GRAFT_CHECKPOINT_DIR is set) after a
-mutation-depth threshold so plan size stays bounded (SURVEY.md §7.4.5).
+Scale notes (100 TB): the session never collects table data to the driver.
+Managed-table mutations run only the jobs their semantics need:
+
+- narrow mutations stay lazy: INSERT is a union, UPDATE a projection, DELETE
+  a filter;
+- MERGE, whose new state joins the old state twice (a left join and an anti
+  join), and every ``CHECKPOINT_EVERY``-th lazy mutation since the last
+  materialization are materialized eagerly through the checkpoint shim
+  (qurious_spark/checkpoint.py: local by default, reliable when
+  SPARK_GRAFT_CHECKPOINT_DIR is set), so later reads plan against a flat
+  scan and plan size stays bounded (SURVEY.md §7.4.5);
+- every DDL/DML result is a one-row local relation, which collects without
+  a Spark job.
 """
 
 from __future__ import annotations
@@ -45,8 +53,10 @@ _lock = threading.Lock()
 DEFAULT_CATALOG = "qurious"  # reference: qurious/src/execution/config.rs:1-13
 DEFAULT_SCHEMA = "public"
 
-# Mutation depth after which a managed table is checkpointed so INSERT-as-union
-# chains don't grow the logical plan unboundedly (SURVEY.md §7.4.5).
+# Lazy mutations (INSERT / UPDATE / DELETE / replace) since the last
+# materialization after which a managed table is checkpointed, so union /
+# projection / filter chains don't grow the logical plan unboundedly
+# (SURVEY.md §7.4.5). MERGE materializes on every call and resets the depth.
 CHECKPOINT_EVERY = 16
 
 # Time-travel history: versions retained per managed table (bounded ring).
@@ -269,10 +279,16 @@ class ManagedTable:
 
     Spark analogue of the reference's ``MemoryTable``
     (qurious/src/datasource/memory.rs:24-28): holds current contents as a
-    DataFrame (lazy plan), supports insert (union with column alignment,
-    default fill, cast — reference qurious/src/planner/sql.rs:790-873),
-    delete (anti-filter) and update (masked projection — the plan shape the
+    DataFrame, supports insert (union with column alignment, default fill,
+    cast — reference qurious/src/planner/sql.rs:790-873), delete
+    (anti-filter) and update (masked projection — the plan shape the
     reference builds at qurious/src/planner/sql.rs:377-432).
+
+    These narrow mutations keep ``df`` a lazy plan. ``_bump`` materializes it
+    (checkpoint shim) when asked to — MERGE does, because its state joins
+    the old state twice — and after every ``CHECKPOINT_EVERY`` lazy
+    mutations since the last materialization. The reference's MemoryTable
+    holds materialized batches throughout.
     """
 
     def __init__(
@@ -289,8 +305,8 @@ class ManagedTable:
         self._mutations = 0
         # Session-scoped time travel: version -> snapshot DataFrame.
         # DataFrames are immutable plans, so a snapshot is just the df
-        # reference at mutation time (no copy); the every-16 checkpoint in
-        # _bump keeps old lineages shallow. Bounded ring: SNAPSHOT_KEEP.
+        # reference at mutation time (no copy); the materializations in
+        # _bump keep old lineages shallow. Bounded ring: SNAPSHOT_KEEP.
         self.version = 0
         self.snapshots: dict[int, DataFrame] = {0: df}
 
@@ -317,13 +333,15 @@ class ManagedTable:
                 f"{op}: NOT NULL constraint violated on {self.name} ({', '.join(sorted(cols))})"
             )
 
-    def _bump(self) -> None:
+    def _bump(self, materialize: bool = False) -> None:
+        """Record a mutation of ``df`` as a new version. ``materialize`` (or
+        the ``CHECKPOINT_EVERY``-th lazy mutation since the last
+        materialization) checkpoints ``df`` eagerly, so later reads plan
+        against a flat scan instead of the accumulated lineage."""
         self._mutations += 1
-        if self._mutations % CHECKPOINT_EVERY == 0:
-            # Truncate the union/filter plan chain; eager=True materializes
-            # the table now so later reads plan against a flat scan instead
-            # of the accumulated union/filter lineage.
+        if materialize or self._mutations >= CHECKPOINT_EVERY:
             self.df = _checkpoint(self.df, eager=True)
+            self._mutations = 0
         self.version += 1
         self.snapshots[self.version] = self.df
         for v in [v for v in self.snapshots if v <= self.version - SNAPSHOT_KEEP]:
@@ -331,9 +349,15 @@ class ManagedTable:
 
     def insert_df(self, source: DataFrame, columns: list[str] | None = None) -> int:
         """INSERT INTO .. [(cols)] SELECT/VALUES: align columns, fill
-        defaults, cast to target types, then union."""
+        defaults, cast to target types, then union. Returns the inserted row
+        count: read off the optimized plan when the source folds to a local
+        relation (INSERT .. VALUES), one count job otherwise."""
         target_schema = self.df.schema
-        n = source.count()
+        plan = source._jdf.queryExecution().optimizedPlan()
+        if plan.nodeName() == "LocalRelation":
+            n = plan.data().size()
+        else:
+            n = source.count()
         if columns:
             if len(columns) != len(source.columns):
                 raise ValueError(
@@ -772,7 +796,9 @@ class Session:
         handles every MATCHED arm (first-match-wins via a single when-chain
         per column), ONE left anti join produces the NOT MATCHED inserts;
         both are key-equi joins Catalyst can run as broadcast or shuffle
-        hash. No collect; the new table state stays a lazy plan.
+        hash. No collect. The new state is materialized (checkpoint shim, via
+        ``_bump``): left lazy, every later read and the next MERGE's
+        cardinality check would re-run both joins.
         """
         mt = self._get_managed(stmt.table)
         talias = stmt.alias or "t"
@@ -878,7 +904,7 @@ class Session:
             mt._check_notnull(inserted, "MERGE")
 
         mt.df = updated.unionByName(inserted) if inserted is not None else updated
-        mt._bump()
+        mt._bump(materialize=True)
         self._put_table(mt.name, mt)
         return self._count_df(src.count())
 
@@ -890,5 +916,8 @@ class Session:
 
     def _count_df(self, n: int) -> DataFrame:
         """DML result shape: single `count` column (reference:
-        qurious/src/utils/batch.rs:13 make_count_batch)."""
-        return self.spark.createDataFrame([(n,)], "count bigint")
+        qurious/src/utils/batch.rs:13 make_count_batch). A local relation,
+        so collecting it runs no Spark job."""
+        return self.spark.sql(
+            f"SELECT * FROM VALUES (CAST({int(n)} AS BIGINT)) AS t(count)"
+        )

@@ -1,5 +1,7 @@
 import os
+import re
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -21,6 +23,10 @@ SF_SMOKE = "/root/testdata/sf0.001"
 #
 # The full suite remains the builder's pre-commit gate:
 #   QS_FULL_TESTS=1 python -m pytest tests/ -q
+# A slow test the invocation asks for — named by node id, or selected with a
+# ``-m`` expression that names ``slow`` — runs without the env var:
+#   python -m pytest tests/test_dml_property.py::test_dml_sequence_matches_model
+#   python -m pytest tests/ -m slow
 # --------------------------------------------------------------------------- #
 
 _SLOW_NODE_IDS = {
@@ -31,14 +37,49 @@ _SLOW_NODE_IDS = {
 }
 
 
+def _named_node_ids(config) -> set[str]:
+    """Node ids named on the command line (``path::name[...]`` arguments),
+    rewritten relative to the rootdir the way pytest spells ``item.nodeid``."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if not sep:
+            continue
+        full = Path(config.invocation_params.dir, path).resolve()
+        try:
+            rel = full.relative_to(config.rootpath).as_posix()
+        except ValueError:
+            continue
+        named.add(f"{rel}::{rest}")
+    return named
+
+
+def _asked_for(item, named: set[str], slow_marker_selected: bool) -> bool:
+    if slow_marker_selected and "slow" in item.keywords:
+        return True
+    # naming a test selects all of its parametrizations; naming a class,
+    # all of its methods
+    return any(
+        item.nodeid == n or item.nodeid.startswith((n + "[", n + "::"))
+        for n in named
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("QS_FULL_TESTS") == "1":
         return
     skip = pytest.mark.skip(
         reason="slow soak/property/subprocess test; QS_FULL_TESTS=1 to run"
     )
+    named = _named_node_ids(config)
+    markexpr = config.getoption("markexpr") or ""
+    slow_marker_selected = bool(
+        re.search(r"\bslow\b", markexpr) and not re.search(r"\bnot\s+slow\b", markexpr)
+    )
     for item in items:
-        if "slow" in item.keywords or item.nodeid in _SLOW_NODE_IDS:
+        if "slow" not in item.keywords and item.nodeid not in _SLOW_NODE_IDS:
+            continue
+        if not _asked_for(item, named, slow_marker_selected):
             item.add_marker(skip)
 
 

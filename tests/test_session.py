@@ -5,6 +5,7 @@ Mirrors the reference's session-level SQL tests
 (create/insert/delete/group_by/join — SURVEY.md §5).
 """
 
+import itertools
 import os
 import tempfile
 
@@ -333,6 +334,100 @@ def test_time_travel_history_is_immutable_after_merge(fresh):
     )                                                          # v2
     assert {(r.k, r.v) for r in fresh.sql("SELECT * FROM tt2 VERSION AS OF 1").collect()} == {(1, 10)}
     assert {(r.k, r.v) for r in fresh.sql("SELECT * FROM tt2").collect()} == {(1, 11), (2, 20)}
+
+
+_job_groups = itertools.count()
+
+
+def _jobs_during(spark, fn):
+    """Run ``fn`` and count the Spark jobs it ran, through a job group of
+    its own (the status store's job list is capped, so a before/after
+    total stops moving in a long test session)."""
+    sc = spark.sparkContext
+    group = f"test-session-jobs-{next(_job_groups)}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dml_results_collect_without_jobs(spark, fresh):
+    # every DDL/DML answer is a one-row local relation (reference:
+    # make_count_batch), so collecting it runs no Spark job
+    fresh.sql("CREATE TABLE dj_src (k BIGINT, v BIGINT)")
+    fresh.sql("INSERT INTO dj_src VALUES (1, 100), (7, 700)")
+    for text, want in (
+        ("CREATE TABLE dj (k BIGINT, v BIGINT)", 0),
+        ("INSERT INTO dj VALUES (1, 10), (2, 20), (3, 30)", 3),
+        ("UPDATE dj SET v = v + 1 WHERE k = 2", 0),
+        ("DELETE FROM dj WHERE k = 3", 0),
+        (
+            "MERGE INTO dj t USING dj_src s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *",
+            2,
+        ),
+        ("DROP TABLE dj", 0),
+    ):
+        df = fresh.sql(text)
+        rows, jobs = _jobs_during(spark, df.collect)
+        assert jobs == 0, text
+        assert df.dtypes == [("count", "bigint")], text
+        assert [r["count"] for r in rows] == [want], text
+
+
+def test_insert_row_count_sources(spark, fresh):
+    fresh.sql("CREATE TABLE ic (a INT, b VARCHAR)")
+    # VALUES folds to a local relation: the count comes off the plan, and
+    # the whole statement (lazy union, no NOT NULL column) runs no job
+    df, jobs = _jobs_during(
+        spark, lambda: fresh.sql("INSERT INTO ic VALUES (1, 'x'), (2, 'y'), (3, NULL)")
+    )
+    assert jobs == 0
+    assert df.collect()[0]["count"] == 3
+    # any other source keeps its count job
+    df = fresh.sql("INSERT INTO ic SELECT a + 10, b FROM ic WHERE a > 1")
+    assert df.collect()[0]["count"] == 2
+    assert fresh.sql("SELECT count(*) AS c FROM ic").collect()[0].c == 5
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().treeString()
+
+
+def test_merge_materializes_state(fresh):
+    fresh.sql("CREATE TABLE mm (k BIGINT, v BIGINT)")
+    fresh.sql("INSERT INTO mm VALUES (1, 10), (2, 20)")        # v1
+    fresh.sql(
+        "MERGE INTO mm t USING (SELECT 1 AS k, 11 AS v UNION ALL SELECT 3, 30) s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )                                                          # v2
+    # the merged state is a flat scan: reads no longer re-run its joins
+    assert "Join" not in _optimized_plan(fresh.table("mm"))
+    assert fresh.tables["mm"]._mutations == 0
+    assert {(r.k, r.v) for r in fresh.sql("SELECT * FROM mm").collect()} == {
+        (1, 11), (2, 20), (3, 30)
+    }
+    # the pre-MERGE version still reads the old rows
+    assert {(r.k, r.v) for r in fresh.sql("SELECT * FROM mm VERSION AS OF 1").collect()} == {
+        (1, 10), (2, 20)
+    }
+
+
+def test_lazy_mutations_checkpoint_every_sixteenth(fresh):
+    from qurious_spark.session import CHECKPOINT_EVERY
+
+    fresh.sql("CREATE TABLE ce (a INT)")
+    for i in range(CHECKPOINT_EVERY - 1):
+        fresh.sql(f"INSERT INTO ce VALUES ({i})")
+    assert "Union" in _optimized_plan(fresh.table("ce"))
+    fresh.sql(f"INSERT INTO ce VALUES ({CHECKPOINT_EVERY - 1})")
+    assert "Union" not in _optimized_plan(fresh.table("ce"))
+    assert fresh.sql("SELECT count(*) AS c FROM ce").collect()[0].c == CHECKPOINT_EVERY
 
 
 def test_describe_history(fresh):

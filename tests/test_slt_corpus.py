@@ -28,14 +28,18 @@ _project = sorted(glob.glob(os.path.join(PROJECT_SQL_DIR, "*.slt")))
 
 
 @pytest.mark.skipif(not _general, reason="reference slt corpus not available")
-@pytest.mark.parametrize("slt_path", _general, ids=os.path.basename)
+@pytest.mark.parametrize(
+    "slt_path", _general, ids=[os.path.basename(p) for p in _general]
+)
 def test_reference_slt_file(spark, slt_path):
     result = run_slt_file(slt_path, spark)
     assert result.ok, "\n".join(result.failures)
     assert result.passed == result.total
 
 
-@pytest.mark.parametrize("slt_path", _project, ids=os.path.basename)
+@pytest.mark.parametrize(
+    "slt_path", _project, ids=[os.path.basename(p) for p in _project]
+)
 def test_project_slt_file(spark, slt_path):
     """Project-authored slt files covering the beyond-reference SQL surface
     (windows, set ops, DISTINCT, IN-subqueries, dialect shim) through the
