@@ -13,6 +13,9 @@ Setting ``SPARK_GRAFT_CHECKPOINT_DIR`` (an HDFS/S3/posix path visible to all
 executors) switches every call site to reliable ``checkpoint()`` against that
 directory — no code edits, the same pattern as the AQE / broadcast-threshold
 / ANSI env knobs (VERDICT r10 task 7).
+
+The module also holds the one size gate (``input_is_large``) that decides,
+from Catalyst's estimate alone, whether a query takes its at-scale plan.
 """
 
 from __future__ import annotations
@@ -45,32 +48,34 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.checkpoint(eager=eager)
 
 
-# Minimum ESTIMATED input bytes before checkpoint_if_large materializes a
-# twice-consumed intermediate. 1 GiB default: below it, recomputing the
-# branch (an extra local scan of a few MB) is cheaper than a checkpoint
-# job + block writes (measured +0.18s on tpch_q15 at sf0.1); above it, the
-# second full pass over the input dwarfs materializing the small aggregate.
-# Env-tunable so tests pin the materialized path and a cluster can lower it.
-MATERIALIZE_BYTES_DEFAULT = 1 << 30
+# The one size gate: is this query's input cluster-sized? Every plan choice
+# that trades a fixed local cost for an at-scale win asks it, against one
+# 1 GiB threshold on the Catalyst size estimate of the query's input:
+# - final_sort_small (queries/__init__.py): below it, coalesce(1) saves the
+#   range sort's sampling job and shuffle; above it, the single task would
+#   be a straggler;
+# - q2/q17 (queries/tpch.py): above it, the semi-join restriction and the
+#   materialization of its twice-consumed output pay for themselves;
+# - q15 (queries/tpch.py): above it, the supplier-grained aggregate is
+#   checkpointed once; below it, recomputing the branch (an extra local scan
+#   of a few MB) is cheaper than a checkpoint job + block writes (measured
+#   +0.18s on tpch_q15 at sf0.1).
+# SPARK_GRAFT_LARGE_INPUT_BYTES overrides the threshold (read per call), so
+# tests and the correctness gate can force every site to its at-scale branch
+# (=0) and a cluster can lower it.
+LARGE_INPUT_BYTES = 1 << 30
 
 
-def checkpoint_if_large(df: DataFrame, size_of: DataFrame | None = None) -> DataFrame:
-    """Materialize ``df`` iff recomputing it would re-read a large input.
+def estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (file-size totals for scans).
+    Driver-side metadata only: no job runs and no data is read."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
-    ``size_of`` is the frame whose Catalyst size estimate stands in for the
-    recompute cost (typically the big-table scan feeding ``df``); defaults
-    to ``df`` itself. Driver-side metadata only — no job runs for the probe.
-    Each invocation materializes fresh (localCheckpoint / reliable
-    checkpoint per the shim) — nothing is reused across invocations.
-    """
-    thresh = int(
-        os.environ.get("SPARK_GRAFT_MATERIALIZE_BYTES", MATERIALIZE_BYTES_DEFAULT)
-    )
-    probe = df if size_of is None else size_of
-    size = int(probe._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size >= thresh:
-        return checkpoint(df)
-    return df
+
+def input_is_large(df: DataFrame) -> bool:
+    """True iff ``df``'s estimated size reaches the large-input threshold."""
+    thresh = int(os.environ.get("SPARK_GRAFT_LARGE_INPUT_BYTES", LARGE_INPUT_BYTES))
+    return estimated_bytes(df) >= thresh
 
 
 def _base_dir(path: str) -> str:

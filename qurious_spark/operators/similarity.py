@@ -309,10 +309,14 @@ def _srp_key_sql(vec_sql: str, table_planes: list[list[float]]) -> str:
     the registry (measured seconds per build on a degraded host). The ±1
     literals now print into the text (exact: 1.0/-1.0 are binary-exact
     doubles), same fold order, bit-identical keys
-    (pin: tests/test_similarity.py::test_srp_keyed_sql_text_form).
+    (pin: tests/test_similarity.py::test_srp_keyed_sql_text_form). Any plane
+    component other than ±1.0 raises instead of printing as its sign.
     """
     terms = ["CAST(0 AS BIGINT)"]
     for j, plane in enumerate(table_planes):
+        bad = [x for x in plane if x not in (1.0, -1.0)]
+        if bad:
+            raise ValueError(f"SRP plane components must be ±1.0, got {bad[:3]}")
         lit = "array(" + ", ".join("1.0D" if x > 0 else "-1.0D" for x in plane) + ")"
         terms.append(
             f"CAST(CASE WHEN {V.dot_sql(vec_sql, lit)} >= 0 "

@@ -15,11 +15,10 @@ tiebreaker so top-n is deterministic.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from qurious_spark.checkpoint import checkpoint, input_is_large
 from qurious_spark.queries import (
     df_query,
     ensure_views,
@@ -52,29 +51,6 @@ from qurious_spark.queries import (
 # type SUM(DECIMAL(p,s)) would have produced, so every downstream expression
 # (ROUND, division, double cast) is unchanged. ~15 ns/row instead of ~300.
 # --------------------------------------------------------------------------- #
-
-
-# Minimum ESTIMATED input bytes before q2/q17 switch from the plain
-# decorrelated SQL to the semi-join-restricted form (r13, VERDICT r12 task
-# 5; same estimate-gated pattern as checkpoint.checkpoint_if_large). The
-# restriction is a 100 TB win — it drops ~98% of the rows feeding the
-# decorrelated MIN/AVG aggregate and the outer join — but BELOW the gate its
-# extra part scans and broadcast build cost more than they save (interleaved
-# A/B at sf0.1: q2 0.636→0.432 s, q17 0.530→0.406 s plain vs restricted).
-# Both forms are bit-equal (tests/test_moneysum.py pins each path).
-RESTRICT_BYTES_DEFAULT = 1 << 30
-
-
-def _input_is_large(df: DataFrame) -> bool:
-    """Catalyst size estimate vs SPARK_GRAFT_RESTRICT_BYTES — driver-side
-    metadata only, no job runs."""
-    thresh = int(
-        os.environ.get("SPARK_GRAFT_RESTRICT_BYTES", RESTRICT_BYTES_DEFAULT)
-    )
-    return (
-        int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        >= thresh
-    )
 
 
 def _unit_expr(x: str, s: int) -> str:
@@ -210,12 +186,14 @@ _Q2_ORACLE = """
 @df_query("tpch_q2", _Q2_ORACLE)
 def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_views(spark, sf_dir)
-    li = spark.table("lineitem")
-    # r13: below the input-size gate the plain correlated-subquery SQL wins
-    # (Catalyst's decorrelated aggregate over a few MB costs less than the
-    # restriction's extra part scans — A/B in the gate-constant header);
-    # above it the r12 semi-join restriction pays for itself ~50x over.
-    if not _input_is_large(li):
+    # r13 (VERDICT r12 task 5): below the shared input-size gate
+    # (checkpoint.input_is_large) the plain correlated-subquery SQL wins —
+    # Catalyst's decorrelated aggregate over a few MB costs less than the
+    # restriction's extra part scans and broadcast build (interleaved A/B at
+    # sf0.1: q2 0.636→0.432 s, q17 0.530→0.406 s plain vs restricted). Above
+    # it the r12 semi-join restriction drops ~98% of the rows feeding the
+    # MIN aggregate and the outer join. Both forms are pinned bit-equal.
+    if not input_is_large(spark.table("lineitem")):
         return spark.sql(_Q2_ORACLE)
     # the semi-filtered fact frame as ONE SQL text (r12 driver-latency pass;
     # same plan and broadcast hint, bit-equality held by the existing pin)
@@ -230,11 +208,9 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     # li_f feeds BOTH the MIN aggregate and the outer join; materialize the
-    # narrow semi-filtered frame once when the lineitem input is cluster-
-    # sized (local no-op below the gate; pin covers the materialized path)
-    from qurious_spark.checkpoint import checkpoint_if_large
-
-    li_f = checkpoint_if_large(li_f, size_of=li)
+    # narrow semi-filtered frame once (this branch only runs at cluster-sized
+    # input; the pin covers it)
+    li_f = checkpoint(li_f)
     min_pp = li_f.groupBy("l_partkey").agg(
         F.expr("MIN(l_extendedprice / l_quantity) AS __min_uc")
     )
@@ -513,7 +489,7 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below-gate single task is O(20); above the gate the wide range sort
     # stays, same as every other final_sort_small site.
     return final_sort_small(
-        out, "revenue DESC, c_custkey", size_of=spark.table("lineitem")
+        out, "revenue DESC, c_custkey", input_is_large(spark.table("lineitem"))
     )
 
 
@@ -580,7 +556,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ~2.5% of partkeys the threshold keeps — a few hundred rows at
     # bench SFs; above it the plan keeps the wide range sort (the output
     # grows with the part domain, so it is NOT domain-bounded like q1/q5).
-    return final_sort_small(out, "part_value DESC, l_partkey", size_of=li)
+    return final_sort_small(out, "part_value DESC, l_partkey", input_is_large(li))
 
 # Q12 — shipping modes and order priority (reference q12.slt). Adapted: no
 # l_shipmode/l_receiptdate; buckets lines by shipping delay instead, keeping
@@ -671,7 +647,7 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final_sort_small(
         per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist")),
         "custdist DESC, c_count DESC",
-        size_of=spark.table("orders"),
+        input_is_large(spark.table("orders")),
     )
 
 # Q14 — promo revenue share: conditional aggregation ratio over one month.
@@ -731,10 +707,8 @@ _Q15_ORACLE = """
 
 @df_query("tpch_q15", _Q15_ORACLE)
 def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qurious_spark.checkpoint import checkpoint_if_large
-
     ensure_views(spark, sf_dir)
-    li = spark.table("lineitem")
+    large = input_is_large(spark.table("lineitem"))
     # the filtered aggregate as ONE SQL text (r12 driver-latency pass — one
     # py4j round trip; same plan, bit-equality held by the existing pins)
     rev = spark.sql(
@@ -753,7 +727,8 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass costs more than the checkpoint job; below the threshold the
     # double-scan of a few MB is cheaper (A/B in OPTIMIZATION_r12.md).
     # Recomputed fresh per invocation — nothing persists across runs.
-    rev = checkpoint_if_large(rev, size_of=li)
+    if large:
+        rev = checkpoint(rev)
     mx = rev.agg(F.max("total_revenue").alias("__mx"))
     winners = (
         rev.crossJoin(F.broadcast(mx))
@@ -769,8 +744,8 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: size-gated final sort. Below the gate coalesce(1) also collapses
     # the supplier-scan probe side of the broadcast join to one task — fine
     # for a sub-GiB input, a scan-serializer at cluster sizes, hence the
-    # same gate as the checkpoint above.
-    return final_sort_small(out, "s_suppkey", size_of=li)
+    # same gate decision as the checkpoint above.
+    return final_sort_small(out, "s_suppkey", large)
 
 # Q16 — part/supplier relationship count: COUNT(DISTINCT) + NOT IN subquery.
 # (partsupp → lineitem as the part-supplier link; comment filter → negative
@@ -824,10 +799,9 @@ _Q17_ORACLE = """
 @df_query("tpch_q17", _Q17_ORACLE)
 def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_views(spark, sf_dir)
-    li = spark.table("lineitem")
-    # r13: same input-size gate as tpch_q2 (see RESTRICT_BYTES_DEFAULT) —
-    # plain correlated SQL below it, the r12 restriction above it.
-    if not _input_is_large(li):
+    # r13: same input-size gate as tpch_q2 (A/B there) — plain correlated
+    # SQL below it, the r12 restriction above it.
+    if not input_is_large(spark.table("lineitem")):
         return spark.sql(_Q17_ORACLE)
     # one broadcast semi-join restricts BOTH consumers to Brand#13 partkeys
     # (ONE SQL text — r12 driver-latency pass; same plan, pin-held)
@@ -841,10 +815,8 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     # li_b13 feeds both the AVG aggregate and the main join; materialize the
-    # semi-filtered frame once at cluster input sizes (local no-op)
-    from qurious_spark.checkpoint import checkpoint_if_large
-
-    li_b13 = checkpoint_if_large(li_b13, size_of=li)
+    # semi-filtered frame once (this branch only runs at cluster input sizes)
+    li_b13 = checkpoint(li_b13)
     avg_pp = li_b13.groupBy("l_partkey").agg(
         F.avg("l_quantity").alias("__avg_qty")
     )

@@ -114,3 +114,28 @@ def test_rdd_access_is_metadata_only_in_spread():
     ]
     assert not unexpected, f"new .rdd access outside spread(): {unexpected}"
     assert len(hits) == 1, f"expected exactly the spread() probe, got: {hits}"
+
+
+def test_size_estimate_is_read_in_one_place():
+    """Every size gate goes through checkpoint.estimated_bytes; the Catalyst
+    ``sizeInBytes`` read appears exactly once in the package, inside that
+    function, so a fifth copy of the gate fails here."""
+    import ast
+
+    pkg = os.path.dirname(QUERIES_DIR)
+    hits = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            for lineno, line in enumerate(f, 1):
+                if "sizeInBytes" in line:
+                    hits.append((os.path.relpath(path, pkg), lineno))
+    assert len(hits) == 1, f"expected one sizeInBytes read, got: {hits}"
+    rel, lineno = hits[0]
+    assert rel == "checkpoint.py", hits
+    with open(os.path.join(pkg, rel)) as f:
+        tree = ast.parse(f.read())
+    fn = next(
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "estimated_bytes"
+    )
+    assert fn.lineno <= lineno <= fn.end_lineno, hits

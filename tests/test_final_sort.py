@@ -3,9 +3,9 @@ final_sort_small).
 
 Every converted query must produce the EXACT same rows, in the EXACT same
 order, with the EXACT same schema as the original single-statement ORDER BY
-form — on BOTH sides of the size gate (coalesce(1)+sortWithinPartitions
-below, plain orderBy above). The gate env var is read per call, so both
-branches are exercised inside one session.
+form — on BOTH sides of the size gate (COALESCE(1) + SORT BY below, plain
+ORDER BY above). The gate env var (SPARK_GRAFT_LARGE_INPUT_BYTES) is read
+per call, so both branches are exercised inside one session.
 """
 
 from __future__ import annotations
@@ -53,20 +53,26 @@ def test_sql_final_sort_queries_match_original(spark):
         assert_frames_bit_equal(original, q.REGISTRY[name](spark, SF))
 
 
+DF_FORMS = ("tpch_q10", "tpch_q11", "tpch_q13", "tpch_q15")
+
+
 def test_final_sort_above_gate_is_plain_orderby(spark, monkeypatch):
-    """Forcing the gate low (threshold 0 => nothing is 'small') must fall
-    back to the untouched wide ORDER BY plan — and still match."""
+    """Forcing the gate low (threshold 0 => every input is 'large') must fall
+    back to the untouched wide ORDER BY plan at every site, SQL and df
+    forms — and the SQL forms must still match their original text."""
     import qurious_spark.queries as q
 
     q.load_all()
     q.ensure_views(spark, SF)
-    name, (inner, order_by) = next(iter(q.FINAL_SORT_FORMS.items()))
-    monkeypatch.setenv("SPARK_GRAFT_SORT1_BYTES", "0")
-    above = q.REGISTRY[name](spark, SF)
-    plan = above._jdf.queryExecution().optimizedPlan().toString()
-    assert "Coalesce" not in plan, "gate=0 must keep the wide sort"
-    original = spark.sql(f"{inner}\n    ORDER BY {order_by}")
-    assert_frames_bit_equal(original, above)
+    monkeypatch.setenv("SPARK_GRAFT_LARGE_INPUT_BYTES", "0")
+    for name in (*q.FINAL_SORT_FORMS, *DF_FORMS):
+        above = q.REGISTRY[name](spark, SF)
+        plan = above._jdf.queryExecution().executedPlan().toString()
+        assert "Coalesce" not in plan, f"{name}: gate=0 must keep the wide sort"
+        assert "rangepartitioning" in plan, f"{name}: wide sort missing"
+    for name, (inner, order_by) in q.FINAL_SORT_FORMS.items():
+        original = spark.sql(f"{inner}\n    ORDER BY {order_by}")
+        assert_frames_bit_equal(original, q.REGISTRY[name](spark, SF))
 
 
 def test_final_sort_below_gate_plans_no_range_exchange(spark, monkeypatch):
@@ -77,7 +83,7 @@ def test_final_sort_below_gate_plans_no_range_exchange(spark, monkeypatch):
 
     q.load_all()
     q.ensure_views(spark, SF)
-    monkeypatch.setenv("SPARK_GRAFT_SORT1_BYTES", str(1 << 40))
+    monkeypatch.setenv("SPARK_GRAFT_LARGE_INPUT_BYTES", str(1 << 40))
     for name in q.FINAL_SORT_FORMS:
         df = q.REGISTRY[name](spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -92,20 +98,39 @@ def test_df_final_sort_queries_match_orderby(spark, monkeypatch):
 
     q.load_all()
     q.ensure_views(spark, SF)
-    for name in ("tpch_q10", "tpch_q11", "tpch_q13", "tpch_q15"):
-        monkeypatch.setenv("SPARK_GRAFT_SORT1_BYTES", "0")
+    for name in DF_FORMS:
+        monkeypatch.setenv("SPARK_GRAFT_LARGE_INPUT_BYTES", "0")
         wide = q.REGISTRY[name](spark, SF)
-        monkeypatch.setenv("SPARK_GRAFT_SORT1_BYTES", str(1 << 40))
+        monkeypatch.setenv("SPARK_GRAFT_LARGE_INPUT_BYTES", str(1 << 40))
         small = q.REGISTRY[name](spark, SF)
         assert_frames_bit_equal(wide, small)
 
 
-def test_order_columns_parser():
-    from qurious_spark.queries import _order_columns
+def test_final_sort_parses_nulls_and_function_commas(spark):
+    """The ORDER BY text goes through Spark's SQL parser on both branches:
+    a comma inside a function call and an explicit NULLS LAST both keep
+    their SQL meaning."""
+    from qurious_spark.queries import final_sort_small
 
-    cols = _order_columns("a, b DESC, c ASC, d desc")
-    texts = [str(c) for c in cols]
-    assert "ASC" in texts[0] and "'a" in texts[0]
-    assert "DESC" in texts[1] and "'b" in texts[1]
-    assert "ASC" in texts[2] and "'c" in texts[2]
-    assert "DESC" in texts[3] and "'d" in texts[3]
+    df = spark.sql(
+        "SELECT * FROM VALUES (1, NULL), (NULL, NULL), (2, 0), (3, 5), (NULL, 5)"
+        " AS t(a, b)"
+    )
+    order_by = "coalesce(b, 0) DESC, a ASC NULLS LAST"
+    expected = [(3, 5), (None, 5), (1, None), (2, 0), (None, None)]
+    for large in (False, True):
+        out = final_sort_small(df, order_by, large)
+        assert [tuple(r) for r in out.collect()] == expected, large
+        assert out.schema == df.schema
+
+
+def test_duplicate_final_sort_name_leaves_forms_unchanged():
+    """A duplicate registration raises before FINAL_SORT_FORMS is touched,
+    so the pins never see a stale entry."""
+    import qurious_spark.queries as q
+
+    q.load_all()
+    before = dict(q.FINAL_SORT_FORMS)
+    with pytest.raises(ValueError, match="duplicate query name"):
+        q.sql_query_final_sort("tpch_q1", "SELECT 1 AS x", order_by="x")
+    assert q.FINAL_SORT_FORMS == before

@@ -169,6 +169,17 @@ def test_srp_keyed_sql_text_form(spark, embeddings):
     assert sorted(map(tuple, new_df.collect())) == sorted(map(tuple, old_df.collect()))
 
 
+def test_srp_key_sql_rejects_non_unit_planes():
+    """The plane literals print as ±1.0; any other component must raise
+    instead of being silently replaced by its sign."""
+    from qurious_spark.operators import similarity as S
+
+    with pytest.raises(ValueError, match="±1.0"):
+        S._srp_key_sql("v", [[1.0, -1.0], [0.5, -1.0]])
+    with pytest.raises(ValueError, match="±1.0"):
+        S._srp_key_sql("v", [[1.0, 0.0]])
+
+
 def test_unrolled_sql_twins(spark, embeddings):
     """r13: the SQL-text twins of the dim-unrolled dot/norm/cosine must be
     bit-identical to the Column compositions they replace (same 0-based
